@@ -32,6 +32,14 @@ def exists(spark, path: str) -> bool:
     return fs.exists(hpath)
 
 
+def glob(spark, pattern: str) -> list[str]:
+    """The paths matching a Hadoop glob ``pattern`` ([] when none match).
+    One call from the driver for the whole pattern; the filesystem lists
+    each wildcard level of it."""
+    fs, hpath = get_fs(spark, pattern)
+    return [status.getPath().toString() for status in fs.globStatus(hpath) or []]
+
+
 def mkdirs(spark, path: str) -> None:
     fs, hpath = get_fs(spark, path)
     fs.mkdirs(hpath)

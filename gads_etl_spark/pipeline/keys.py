@@ -13,6 +13,21 @@ from datetime import date, datetime, timezone
 
 LOGICAL_KEY = ("source", "customer_id", "query_name", "logical_date")
 
+#: Characters Spark percent-encodes in hive partition directory names
+#: (``ExternalCatalogUtils.escapePathName``): ASCII controls 0x01-0x1F,
+#: DEL, and ``"#%'*/:=?\{[]^``.
+_PATH_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+
+
+def escape_path_name(value: str) -> str:
+    """Hive-escape one partition column name or value exactly as Spark's
+    ``partitionBy`` writer does, so a directory built here is the one a
+    bulk write produced (``run_id=2024-03-01T01%3A00%3A00.000Z``); hive
+    partition discovery unescapes it back on read."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value)
+
 
 @dataclass(frozen=True)
 class PartitionKey:
@@ -30,10 +45,13 @@ class PartitionKey:
         }
 
     def relative_path(self) -> str:
-        """Hive-style directory path (reference docs/raw_sink_contract.md:15-27)."""
-        return (
-            f"source={self.source}/customer_id={self.customer_id}/"
-            f"query_name={self.query_name}/logical_date={self.logical_date.isoformat()}"
+        """Hive-style directory path (reference docs/raw_sink_contract.md:15-27),
+        values escaped like Spark's ``partitionBy`` writer escapes them."""
+        return "/".join(
+            f"{col}={escape_path_name(str(v))}"
+            for col, v in zip(LOGICAL_KEY, (self.source, self.customer_id,
+                                            self.query_name,
+                                            self.logical_date.isoformat()))
         )
 
 

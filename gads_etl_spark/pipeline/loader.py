@@ -18,20 +18,31 @@ Scale notes: the reference loops state rows one pointer lookup at a time;
 here reconciliation is ONE left join + ONE anti-join regardless of
 partition count. Both control tables are tiny relative to data (~1 row per
 logical partition), so at 10M partitions this is still a single small
-shuffle — or a broadcast join if one side fits.
+shuffle — or a broadcast join if one side fits. The joins run ONCE per
+reconcile: the plan's load/replace/demote rows (a Δ-sized batch) are
+collected in one action and held as JVM-local relations, so publishing,
+demoting and counting never re-run them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY
+from gads_etl_spark.pipeline.local import local_frame
 from gads_etl_spark.pipeline.pointer_store import POINTER_SCHEMA, PointerStore
-from gads_etl_spark.pipeline.state_store import StateStore
+from gads_etl_spark.pipeline.state_store import STATE_SCHEMA, StateStore
+
+#: A load/replace target: the logical key and the run to publish.
+TARGET_SCHEMA = T.StructType([
+    f for f in STATE_SCHEMA.fields
+    if f.name in (*LOGICAL_KEY, "current_run_id", "schema_version")
+])
 
 
 @dataclass(frozen=True)
@@ -39,14 +50,20 @@ class ReconciliationPlan:
     """Immutable reconciliation outcome (reference loader.py:23-29).
 
     ``load``/``replace`` carry the logical key + target run_id/schema_version;
-    ``demote`` carries the stale pointer rows.
+    ``demote`` carries the stale pointer rows. A plan from
+    ``WarehouseLoader.reconcile`` is materialized: its frames are
+    JVM-local rows of the pre-mutation snapshot and ``sizes`` holds their
+    row counts. A plan built from lazy frames leaves ``sizes`` unset.
     """
 
     load: DataFrame
     replace: DataFrame
     demote: DataFrame
+    sizes: dict[str, int] | None = field(default=None, compare=False)
 
     def counts(self) -> dict[str, int]:
+        if self.sizes is not None:
+            return dict(self.sizes)
         return {
             "load": self.load.count(),
             "replace": self.replace.count(),
@@ -91,15 +108,34 @@ class WarehouseLoader:
         self._pointers = pointers
 
     def reconcile(self) -> ReconciliationPlan:
-        """Build the plan without mutating anything (dry-run friendly)."""
+        """Build the plan without mutating anything (dry-run friendly).
+
+        The classify and demote joins run in ONE action whose rows (the
+        Δ, not the tables) come back to the driver and are held as
+        JVM-local relations: the plan is a snapshot of the state and
+        pointers as they were, whatever is published afterwards."""
         success = self._states.read().where(F.col("status") == "success")
         ptrs = self._pointers.read()
-        classified = classify_targets(success, ptrs)
-        target_cols = [*LOGICAL_KEY, "current_run_id", "schema_version"]
+        targets = (
+            classify_targets(success, ptrs)
+            .where(F.col("action") != "noop")
+            .select("action", *TARGET_SCHEMA.fieldNames(), F.lit(None).alias("loaded_at"))
+        )
+        stale = demotion_targets(success, ptrs).select(
+            F.lit("demote").alias("action"), *LOGICAL_KEY,
+            F.col("run_id").alias("current_run_id"), "schema_version", "loaded_at",
+        )
+        rows: dict[str, list] = {"load": [], "replace": [], "demote": []}
+        for r in targets.unionByName(stale).collect():
+            rows[r["action"]].append(r)
+        spark = self._states.spark
         return ReconciliationPlan(
-            load=classified.where(F.col("action") == "load").select(*target_cols),
-            replace=classified.where(F.col("action") == "replace").select(*target_cols),
-            demote=demotion_targets(success, ptrs),
+            load=local_frame(spark, rows["load"], TARGET_SCHEMA),
+            replace=local_frame(spark, rows["replace"], TARGET_SCHEMA),
+            demote=local_frame(
+                spark, [{**r.asDict(), "run_id": r["current_run_id"]} for r in rows["demote"]],
+                POINTER_SCHEMA),
+            sizes={k: len(v) for k, v in rows.items()},
         )
 
     def run(self, plan: ReconciliationPlan | None = None) -> ReconciliationPlan:
@@ -109,29 +145,22 @@ class WarehouseLoader:
         Pass ``plan`` to publish a plan already reconciled (and staged)
         by the caller instead of recomputing it."""
         plan = plan or self.reconcile()
-        self._publish(plan)
-        self._demote(plan)
+        sizes = plan.counts()
+        # Skip a commit when there is nothing to publish or demote: a
+        # pointer-table rewrite is cheap but not free, and no-op loads are
+        # the common case in steady state.
+        if sizes["load"] or sizes["replace"]:
+            self._publish(plan)
+        if sizes["demote"]:
+            self._pointers.delete(plan.demote.select(*LOGICAL_KEY))
         return plan
 
     def _publish(self, plan: ReconciliationPlan) -> None:
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         targets = plan.load.unionByName(plan.replace)
-        updates = targets.select(
+        self._pointers.upsert(targets.select(
             *LOGICAL_KEY,
             F.col("current_run_id").alias("run_id"),
             F.coalesce(F.col("schema_version"), F.lit("")).alias("schema_version"),
             F.lit(now).alias("loaded_at"),
-        )
-        # Skip the commit entirely when there is nothing to publish: a
-        # pointer-table rewrite is cheap but not free, and no-op loads are
-        # the common case in steady state.
-        if updates.limit(1).count() == 0:
-            return
-        self._pointers.upsert(
-            updates.select([f.name for f in POINTER_SCHEMA.fields])
-        )
-
-    def _demote(self, plan: ReconciliationPlan) -> None:
-        if plan.demote.limit(1).count() == 0:
-            return
-        self._pointers.delete(plan.demote.select(*LOGICAL_KEY))
+        ))

@@ -9,6 +9,11 @@ raw_sink_object.py):
   raw_sink_local.py:44-48).
 - Writing or sealing an already-sealed partition raises (overwrite refusal —
   reference raw_sink_local.py:34-36, docs/raw_sink_contract.md:48-51).
+- Directory names are hive-escaped exactly as Spark's ``partitionBy``
+  writer escapes them (``keys.escape_path_name``), so a partition written
+  one at a time and one written by a bulk ``partitionBy`` job land in the
+  same directory — ``run_id=2024-03-01T01%3A00%3A00.000Z`` — and hive
+  discovery reads the original value back.
 - run_id discovery goes through the manifest table, never a recursive
   directory listing — at 100 TB, listing a prefix with millions of objects
   is the classic S3 anti-pattern; a parquet manifest scan is one job
@@ -22,6 +27,8 @@ The seal is two artifacts written in order:
 2. A row appended to the ``_manifest`` parquet table — the queryable
    index used by validators/loaders. ``seal_many`` appends one file per
    *batch*, not per partition, so manifest file count tracks job count.
+   The batch is a JVM-local relation (``local.local_frame``): the append
+   is one job and starts no Python workers.
 
 Scale notes: payload is written by executors with Spark's committer (task
 temp → rename), so partial attempts are never visible even before the seal.
@@ -32,7 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +47,8 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from gads_etl_spark.pipeline import fsutil
-from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
+from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey, escape_path_name
+from gads_etl_spark.pipeline.local import local_frame
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("source", T.StringType(), False),
@@ -54,6 +62,13 @@ MANIFEST_SCHEMA = T.StructType([
     T.StructField("api_version", T.StringType(), True),
     T.StructField("query_signature", T.StringType(), True),
 ])
+
+#: The five hive partition columns of a raw-zone directory, typed as the
+#: manifest types them: read with these, ``customer_id`` stays a string
+#: (discovery would infer a digits-only id as a number).
+PARTITION_FIELDS = tuple(
+    f for f in MANIFEST_SCHEMA.fields if f.name in (*LOGICAL_KEY, "run_id")
+)
 
 SEAL_MARKER = "_SEALED.json"
 
@@ -113,12 +128,12 @@ class RawZone:
         read failure would make ``is_sealed`` return False and break the
         immutability contract — reference raw_sink_local.py:34-36)."""
         if not self._path_exists(self._manifest_dir):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self._manifest_dir)
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" in str(exc):
-                return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+                return local_frame(self.spark, [], MANIFEST_SCHEMA)
             raise
 
     def _marker_path(self, key: PartitionKey, run_id: str) -> str:
@@ -132,7 +147,16 @@ class RawZone:
     # -- write path -------------------------------------------------------
 
     def partition_path(self, key: PartitionKey, run_id: str) -> str:
-        return f"{self.root}/{key.relative_path()}/run_id={run_id}"
+        return f"{self.root}/{key.relative_path()}/run_id={escape_path_name(run_id)}"
+
+    def run_glob(self, source: str, query_name: str, logical_date: date,
+                 run_id: str) -> str:
+        """Glob over every customer's ``partition_path`` of one
+        (source, query, day, run)."""
+        return (f"{self.root}/source={escape_path_name(source)}/customer_id=*/"
+                f"query_name={escape_path_name(query_name)}/"
+                f"logical_date={logical_date.isoformat()}/"
+                f"run_id={escape_path_name(run_id)}")
 
     def write_partition(
         self,
@@ -163,21 +187,29 @@ class RawZone:
                 f"partition {key} run_id={run_id} is sealed; raw partitions are immutable"
             )
         path = self.partition_path(key, run_id)
-        if count_mode == "observe":
-            from gads_etl_spark.pipeline.metrics import observed
+        if not df.columns and df.isEmpty():
+            # A zero-row partition read back from its empty directory has
+            # no schema, and no format writes a zero-column frame: it
+            # stays an empty directory (curated staging of an empty raw
+            # partition).
+            fsutil.mkdirs(self.spark, path)
+            record_count = 0
+        else:
+            if count_mode == "observe":
+                from gads_etl_spark.pipeline.metrics import observed
 
-            df, obs = observed(df, f"raw_write:{run_id}")
-        writer = df.write.mode("errorifexists")
-        if self.data_format == "json":
-            writer.json(path)
-        elif self.data_format == "orc":
-            writer.orc(path)
-        else:
-            writer.parquet(path)
-        if count_mode == "observe":
-            record_count = int(obs.get["n_rows"])
-        else:
-            record_count = self._read_payload(path).count()
+                df, obs = observed(df, f"raw_write:{run_id}")
+            writer = df.write.mode("errorifexists")
+            if self.data_format == "json":
+                writer.json(path)
+            elif self.data_format == "orc":
+                writer.orc(path)
+            else:
+                writer.parquet(path)
+            if count_mode == "observe":
+                record_count = int(obs.get["n_rows"])
+            else:
+                record_count = self._read_payload(path).count()
         meta = {
             "source": key.source,
             "customer_id": key.customer_id,
@@ -215,7 +247,7 @@ class RawZone:
             markers[marker] = meta
         for marker, meta in markers.items():
             self._write_file_atomic(marker, json.dumps({k: str(v) for k, v in meta.items()}))
-        rows = self.spark.createDataFrame(metas, MANIFEST_SCHEMA)
+        rows = local_frame(self.spark, metas, MANIFEST_SCHEMA)
         rows.coalesce(1).write.mode("append").parquet(self._manifest_dir)
 
     def compact_manifest(self) -> int:
@@ -253,10 +285,15 @@ class RawZone:
         if schema is not None:
             reader = reader.schema(schema)
         if self.data_format == "json":
-            return reader.option("mode", "FAILFAST").json(path)
-        if self.data_format == "orc":
-            return reader.orc(path)
-        return reader.parquet(path)
+            reader = reader.option("mode", "FAILFAST")
+        try:
+            return reader.format(self.data_format).load(path)
+        except AnalysisException as exc:
+            # A zero-row partition is an empty directory (extract_day_bulk
+            # creates it without a write job): no file to infer from.
+            if schema is None and "UNABLE_TO_INFER_SCHEMA" in str(exc):
+                return self.spark.range(0).drop("id")
+            raise
 
     def read_partition(self, key: PartitionKey, run_id: str,
                        schema: T.StructType | None = None) -> DataFrame:
@@ -266,9 +303,23 @@ class RawZone:
             )
         return self._read_payload(self.partition_path(key, run_id), schema)
 
+    def read_partitions(self, paths: list[str],
+                        data_schema: T.StructType | None = None) -> DataFrame:
+        """Read the given partition directories (``partition_path``s, or
+        glob patterns over them) with their five partition columns — and
+        only them: no listing of the zone above, no schema inference.
+        ``data_schema`` names the payload columns to read; the default
+        (none) is enough for counting rows. Every path must exist."""
+        schema = T.StructType([*(data_schema.fields if data_schema else []),
+                               *PARTITION_FIELDS])
+        reader = self.spark.read.option("basePath", self.root).schema(schema)
+        if self.data_format == "json":
+            reader = reader.option("mode", "FAILFAST")
+        return reader.format(self.data_format).load(paths)
+
     def read_all(self, schema: T.StructType | None = None) -> DataFrame:
         """Read the whole raw zone with hive partition discovery — the
-        batch-validation scan (payload columns + the 5 partition columns).
+        consumer's scan (payload columns + the 5 partition columns).
         """
         reader = self.spark.read.option("basePath", self.root)
         if schema is not None:

@@ -20,7 +20,11 @@ buckets over by reference. On a cluster with Delta available, ``MERGE
 INTO`` replaces this layer one-for-one. At the reference's projected scale
 (~10M logical partitions at 100 TB) a validator batch touching a few
 hundred keys rewrites O(|Δ| + |table|/n_buckets) rows across a handful of
-parallel tasks — not the whole table through one task.
+parallel tasks — not the whole table through one task. A MERGE is three
+Spark jobs whatever the delta: ONE pass over the delta materializes it
+and observes its touched buckets (and, for the ledger, its invalid
+statuses), ONE shuffle by bucket feeds both the updates-win window and
+the bucket write, and the write itself.
 
 Every filesystem touch goes through the Hadoop FS API (``fsutil``), so a
 ``viewfs://``, ``hdfs://`` or ``s3a://`` root works exactly like a local
@@ -44,14 +48,16 @@ from __future__ import annotations
 
 import json
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from gads_etl_spark.pipeline import fsutil, spark_hash
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY
+from gads_etl_spark.pipeline.local import local_frame
 
 STATE_SCHEMA = T.StructType([
     T.StructField("source", T.StringType(), False),
@@ -71,17 +77,24 @@ VALID_STATUSES = ("pending", "success", "failed")
 
 
 def merge_upsert(current: DataFrame, updates: DataFrame,
-                 key_cols: tuple[str, ...]) -> DataFrame:
+                 key_cols: tuple[str, ...],
+                 shuffle: Callable[[DataFrame], DataFrame] | None = None) -> DataFrame:
     """Relational MERGE: updates win over current on key collision.
 
     Implemented as union + row_number over (key ORDER BY priority) — one
     shuffle on the key, no driver-side loop, scales to any table size.
+    ``shuffle`` repartitions the union before the window; when its
+    partitioning columns are a prefix of ``key_cols`` the window reuses
+    that exchange instead of adding its own.
     """
     cur = current.withColumn("_prio", F.lit(1))
     upd = updates.select(*current.columns).withColumn("_prio", F.lit(0))
+    unioned = cur.unionByName(upd)
+    if shuffle is not None:
+        unioned = shuffle(unioned)
     w = Window.partitionBy(*key_cols).orderBy("_prio")
     return (
-        cur.unionByName(upd)
+        unioned
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_prio", "_rn")
@@ -281,25 +294,43 @@ class _VersionedTable:
         # evaluated JVM-side.
         return F.pmod(F.hash(*self.key_cols), F.lit(self.n_buckets))
 
+    def _probe(self, delta: DataFrame, valid: Column | None = None
+               ) -> tuple[DataFrame, list[int], int]:
+        """ONE pass over a Δ-sized delta: materialize it (its lineage —
+        often a validator join — must not run twice) and, on that same
+        pass, observe the buckets it touches and how many rows fail
+        ``valid``. Returns (materialized delta, touched buckets, invalid)."""
+        obs = Observation(f"merge-probe-{uuid.uuid4().hex[:8]}")
+        metrics = [F.collect_set(self._bucket_expr()).alias("buckets")]
+        if valid is not None:
+            metrics.append(F.count_if(~valid).alias("invalid"))
+        delta = delta.observe(obs, *metrics).localCheckpoint(eager=True)
+        got = obs.get
+        return delta, sorted(got["buckets"]), got.get("invalid", 0)
+
     def _touched_buckets(self, df: DataFrame) -> list[int]:
-        rows = df.select(self._bucket_expr().alias("b")).distinct().collect()
-        return sorted(r["b"] for r in rows)  # ≤ n_buckets values
+        return self._probe(df)[1]  # ≤ n_buckets values
 
     def _write_buckets(self, df: DataFrame, version: str) -> dict[str, str]:
         """Write ``df`` hash-partitioned by bucket; return bucket → dir.
 
-        One shuffle with bounded width (n_buckets tasks) replaces the old
-        ``coalesce(1)`` single-task rewrite; the hive-style ``bucket=``
-        write yields at most a few files per bucket. The data dir carries
-        a per-attempt token: two writers racing to the same version write
-        disjoint dirs, and the losing attempt's dir — referenced by no
-        manifest — is garbage-collected by ``vacuum``.
+        One shuffle with bounded width (n_buckets tasks); the hive-style
+        ``bucket=`` write yields at most a few files per bucket. A frame
+        that already carries its bucket column (``merge``'s window output,
+        partitioned by bucket) is written on that partitioning, with no
+        second shuffle. The data dir carries a per-attempt token: two
+        writers racing to the same version write disjoint dirs, and the
+        losing attempt's dir — referenced by no manifest — is
+        garbage-collected by ``vacuum``.
         """
+        cols = [f.name for f in self.schema.fields]
+        if _BUCKET_COL not in df.columns:
+            df = (df.select(*cols)
+                  .withColumn(_BUCKET_COL, self._bucket_expr())
+                  .repartition(self.n_buckets, _BUCKET_COL))
         data_dir = f"{self.root}/data/{version}-{uuid.uuid4().hex[:6]}"
         (
-            df.select([f.name for f in self.schema.fields])
-            .withColumn(_BUCKET_COL, self._bucket_expr())
-            .repartition(self.n_buckets, _BUCKET_COL)
+            df.select(*cols, _BUCKET_COL)
             .write.partitionBy(_BUCKET_COL)
             .parquet(data_dir)
         )
@@ -311,7 +342,7 @@ class _VersionedTable:
 
     def _read_paths(self, paths: list[str]) -> DataFrame:
         if not paths:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema).parquet(*paths)
 
     # -- public API -------------------------------------------------------
@@ -319,7 +350,7 @@ class _VersionedTable:
     def read(self) -> DataFrame:
         manifest = self._current_manifest()
         if manifest is None:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self._read_paths(list(manifest["buckets"].values()))
 
     def read_bucket_for(self, key_values: tuple) -> DataFrame:
@@ -343,7 +374,7 @@ class _VersionedTable:
             return self.read()
         manifest = self._current_manifest()
         if manifest is None:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         types = {f.name: f.dataType for f in self.schema.fields}
         dtypes = tuple(types[c] for c in self.key_cols)
         # Driver-side Murmur3 (spark_hash.py, property-pinned against the
@@ -359,7 +390,7 @@ class _VersionedTable:
             ).collect()[0]["b"]
         path = manifest["buckets"].get(str(b))
         if path is None:  # bucket currently holds no rows at all
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self._read_paths([path])
 
     def commit(self, df: DataFrame) -> None:
@@ -375,30 +406,39 @@ class _VersionedTable:
         buckets = self._write_buckets(df, version)
         self._publish(version, parent, buckets)
 
-    def merge(self, updates: DataFrame) -> None:
+    def merge(self, updates: DataFrame, valid: Column | None = None,
+              invalid_message: str = "rows fail the table's validity check") -> None:
         """MERGE touching only buckets that contain updated keys — O(Δ).
 
         Buckets without any updated key are carried into the new manifest
         by reference: their files are not read, not rewritten, not moved.
+        ONE pass over the delta yields the touched buckets and the count
+        of rows failing ``valid`` (a violation raises ``ValueError`` with
+        ``invalid_message`` before anything is written). Current rows of
+        the touched buckets and the delta are then shuffled ONCE, by
+        bucket: the updates-win window runs over (bucket, key) on that
+        partitioning, and the bucket write reuses it too.
         """
         if self.key_cols is None:
             raise ValueError("merge requires key_cols")
+        updates, touched, invalid = self._probe(
+            updates.select([f.name for f in self.schema.fields]), valid)
+        if invalid:
+            raise ValueError(invalid_message)
         parent = self._current_manifest()
         if parent is None or not parent["buckets"]:
             self.commit(updates)
             return
-        # The updates lineage (often a validator join) is consumed twice —
-        # once by the touched-bucket probe, once by the bucket write.
-        # Materialize it once; control batches are Δ-sized by contract.
-        updates = updates.select(
-            [f.name for f in self.schema.fields]
-        ).localCheckpoint(eager=True)
-        touched = self._touched_buckets(updates)
         buckets = dict(parent["buckets"])
         current = self._read_paths(
             [buckets[str(k)] for k in touched if str(k) in buckets]
         )
-        merged = merge_upsert(current, updates, self.key_cols)
+        merged = merge_upsert(
+            current.withColumn(_BUCKET_COL, self._bucket_expr()),
+            updates.withColumn(_BUCKET_COL, self._bucket_expr()),
+            (_BUCKET_COL, *self.key_cols),
+            shuffle=lambda df: df.repartition(self.n_buckets, _BUCKET_COL),
+        )
         version = self._next_version(parent)
         buckets.update(self._write_buckets(merged, version))
         self._publish(version, parent, buckets)
@@ -410,8 +450,7 @@ class _VersionedTable:
         parent = self._current_manifest()
         if parent is None or not parent["buckets"]:
             return
-        keys = keys.select(*self.key_cols).localCheckpoint(eager=True)
-        touched = self._touched_buckets(keys)
+        keys, touched, _ = self._probe(keys.select(*self.key_cols))
         buckets = dict(parent["buckets"])
         touched_present = [k for k in touched if str(k) in buckets]
         if not touched_present:
@@ -513,11 +552,12 @@ class StateStore:
 
     def upsert(self, updates: DataFrame) -> None:
         """MERGE updates into the ledger (M1 — state_store.py:123-163).
-        Only buckets containing updated keys are rewritten."""
-        bad = updates.where(~F.col("status").isin(*VALID_STATUSES)).limit(1).count()
-        if bad:
-            raise ValueError(f"status must be one of {VALID_STATUSES}")
-        self._table.merge(updates)
+        Only buckets containing updated keys are rewritten; the status
+        check rides on the MERGE's single pass over the delta."""
+        self._table.merge(
+            updates, valid=F.col("status").isin(*VALID_STATUSES),
+            invalid_message=f"status must be one of {VALID_STATUSES}",
+        )
 
     def commit(self, full_state: DataFrame) -> None:
         """Replace the whole ledger (control-plane bulk transitions)."""

@@ -17,11 +17,14 @@ Contract parity (reference src/gads_etl/validator.py):
 
 Scale design: the reference validates one partition per call — two point
 lookups and a ledger write each (fine for one process, a driver bottleneck
-at 10M partitions). ``validate_batch`` validates N partitions in ONE job:
-count all requested partitions with a single partition-discovery scan,
-join manifest + previous state, fold multi-run request batches with a
-window, and commit ONE state MERGE. ``validate_partition`` is the
-single-key wrapper kept for API parity.
+at 10M partitions). ``validate_batch`` validates N partitions in one
+batch: the requests become a JVM-local relation, one glob per requested
+(query, day, run) finds its partition directories and ONE read of them
+counts them all (no listing of the zone above them, no schema inference
+— the cost follows the batch, not the lake), the manifest and previous
+state join in, multi-run request batches fold with a window, and ONE
+state MERGE commits the outcome.
+``validate_partition`` is the single-key wrapper kept for API parity.
 """
 
 from __future__ import annotations
@@ -30,13 +33,23 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from gads_etl_spark.pipeline import fsutil
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
-from gads_etl_spark.pipeline.raw_sink import RawZone
+from gads_etl_spark.pipeline.local import local_frame
+from gads_etl_spark.pipeline.raw_sink import PARTITION_FIELDS, RawZone
 from gads_etl_spark.pipeline.state_store import STATE_SCHEMA, StateStore
 
-_REQ = [*LOGICAL_KEY, "run_id", "schema_version"]
+#: One validation attempt: a sealed partition's key, run and schema version.
+REQUEST_SCHEMA = T.StructType([
+    *PARTITION_FIELDS, T.StructField("schema_version", T.StringType(), True),
+])
+_REQ = REQUEST_SCHEMA.fieldNames()
+_ACTUAL_SCHEMA = T.StructType([
+    *PARTITION_FIELDS, T.StructField("actual_count", T.LongType(), False),
+])
 
 
 def _now():
@@ -51,41 +64,34 @@ def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> Dat
     if validated sequentially in run_id order. Returns the merged rows.
     """
     spark = raw.spark
-    # Identical duplicate requests would double-count attempts and emit
-    # duplicate outcome rows; a batch is a *set* of attempts.
-    requests = requests.select(*_REQ).distinct()
+    # The batch is driver-sized: collect it once and continue from a
+    # JVM-local relation. Identical duplicate requests would double-count
+    # attempts and emit duplicate outcome rows; a batch is a *set* of
+    # attempts.
+    attempts = list(dict.fromkeys(tuple(r) for r in requests.select(*_REQ).collect()))
+    requests = local_frame(spark, attempts, REQUEST_SCHEMA)
 
-    # One distributed count of every requested partition: hive-discovery
-    # scan filtered by the request keys, grouped on the full attempt key.
-    # No per-partition jobs. The semi-join alone does NOT prune partition
-    # directories (no DPP for this shape), so literal IN-filters derived
-    # from the request batch are pushed first — the batch is driver-known
-    # and small, and static partition-column predicates prune the listing
-    # down to the requested run/query/date directories before any file
-    # is opened.
-    if raw._path_exists(raw.root):
-        req_rows = requests.select(*LOGICAL_KEY, "run_id").collect()
-        run_ids = sorted({r["run_id"] for r in req_rows})
-        query_names = sorted({r["query_name"] for r in req_rows})
-        dates = sorted({r["logical_date"] for r in req_rows})
-        scan = raw.read_all().where(
-            F.col("run_id").isin(run_ids)
-            & F.col("query_name").isin(query_names)
-            & F.col("logical_date").between(F.lit(dates[0]), F.lit(dates[-1]))
-        )
+    # One count of every requested partition: one glob per requested
+    # (source, query, day, run) finds its customers' directories, one read
+    # of those directories counts them, grouped on the full attempt key.
+    # Directories of customers the batch does not request drop out in the
+    # join; a requested directory that does not exist counts 0 (and fails
+    # the seal check). The count is the validator's own — it never reads
+    # the extractor's.
+    runs = sorted({(a[0], a[2], a[3], a[4]) for a in attempts})
+    dirs = [d for run in runs for d in fsutil.glob(spark, raw.run_glob(*run))]
+    if dirs:
         actual = (
-            scan
-            .join(F.broadcast(requests.select(*LOGICAL_KEY, "run_id")), [*LOGICAL_KEY, "run_id"], "left_semi")
+            raw.read_partitions(dirs)
             .groupBy(*LOGICAL_KEY, "run_id")
             .agg(F.count(F.lit(1)).alias("actual_count"))
         )
-    else:  # nothing extracted yet — every request fails the seal check
-        actual = spark.createDataFrame(
-            [], "source string, customer_id string, query_name string, "
-                "logical_date date, run_id string, actual_count long",
-        )
-    manifest = raw.manifest().select(
-        *LOGICAL_KEY, "run_id", F.col("record_count").alias("expected_count")
+    else:
+        actual = local_frame(spark, [], _ACTUAL_SCHEMA)
+    manifest = (
+        raw.manifest()
+        .where(F.col("run_id").isin(sorted({a[4] for a in attempts})))
+        .select(*LOGICAL_KEY, "run_id", F.col("record_count").alias("expected_count"))
     )
     checked = (
         requests
@@ -152,10 +158,11 @@ def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> Dat
         (F.coalesce(F.col("prev_attempts"), F.lit(0)) + F.col("_n_attempts"))
         .cast("int").alias("attempt_count"),
     )
-    # Materialize once: the outcome rows are one per validated partition
-    # (a job batch, not the whole ledger), and upsert would otherwise
-    # re-execute the raw-zone count scan for each of its two actions.
-    out = spark.createDataFrame(new_rows.collect(), STATE_SCHEMA)
+    # Materialize once, as a JVM-local relation: the outcome rows are one
+    # per validated partition (a job batch, not the whole ledger); the
+    # MERGE then never re-runs the count scan, and callers collect the
+    # returned rows without a job.
+    out = local_frame(spark, new_rows.collect(), STATE_SCHEMA)
     states.upsert(out)
     return out
 
@@ -169,8 +176,10 @@ def validate_partition(
 ) -> dict:
     """Single-partition wrapper over ``validate_batch`` (reference API
     shape, validator.py:23-54). Returns the new state row as a dict."""
-    req = raw.spark.createDataFrame(
-        [{**key.as_dict(), "run_id": run_id, "schema_version": schema_version}]
+    req = local_frame(
+        raw.spark,
+        [{**key.as_dict(), "run_id": run_id, "schema_version": schema_version}],
+        REQUEST_SCHEMA,
     )
     rows = validate_batch(raw, states, req).collect()
     return rows[0].asDict()

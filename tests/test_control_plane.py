@@ -3,6 +3,7 @@ safety rails (reference cli.py:138-232,493-664; docs/control_plane.md)."""
 
 from __future__ import annotations
 
+import time
 from datetime import date, datetime
 
 import pytest
@@ -272,3 +273,39 @@ class TestDriverSideBucketHash:
         assert spark_hash.hash_literals((1.5,), (T.DoubleType(),)) is None
         assert spark_hash.bucket_for(
             (1.5,), (T.DoubleType(),), 64) is None
+
+
+@pytest.fixture
+def new_york(monkeypatch):
+    """A driver whose local zone is not UTC."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_validator_and_transitions_stamp_one_instant(spark, tmp_path, monkeypatch,
+                                                     new_york):
+    """The validator's driver-built outcome rows and a control-plane
+    transition store the same naive ``_now()`` as the same instant on a
+    driver outside UTC, so the ledger's ``updated_at`` has one meaning."""
+    from gads_etl_spark.pipeline import PartitionKey, RawZone, control_plane, validator
+
+    instant = datetime(2024, 3, 1, 12, 30)
+    monkeypatch.setattr(validator, "_now", lambda: instant)
+    monkeypatch.setattr(control_plane, "_now", lambda: instant)
+    states = StateStore(spark, str(tmp_path / "state"))
+    key = PartitionKey("google_ads", "1", "campaign_stats", date(2024, 1, 1))
+
+    def stamp():
+        row = states.read().select("status", F.unix_micros("updated_at")).first()
+        return tuple(row)
+
+    # Never extracted: the validation fails, and a retry requeues it.
+    validator.validate_partition(RawZone(spark, str(tmp_path / "raw")), states,
+                                 key, "run-a")
+    status, validated = stamp()
+    assert status == "failed"
+    ControlPlane(states).retry(customer_id="1")
+    assert stamp() == ("pending", validated)
